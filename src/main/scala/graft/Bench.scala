@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Throughput benchmark over the operator inventory at
   * SPARK_GRAFT_SF_DIR (default sf0.1). Prints ONE JSON line:
-  * {"metric":"total","value":sec,"unit":"sec","queries":{name:sec,...},"sf":dir}
+  * {"metric":"total","value":sec,"unit":"sec","queries":{name:sec,...},"sf":dir,
+  * ...,"n_failed":entries with a failed trial,"cpus":parallelism}
   *
   * Each query materializes through the noop DataSource-v2 sink so every
   * output column is actually computed (a count() would let Catalyst prune
@@ -123,13 +124,18 @@ object Bench {
       "\"" + k + f"""\":{"median":$m%.3f,"trials":$n}"""
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    // `total` sums only entries with a sample, so a failure would read as
+    // a faster suite: report how many entries lost any trial, and the
+    // parallelism the run had.
+    val nFailed = results.count(_._3 < trials)
+    val extra = s""","n_failed":$nFailed,"cpus":${spark.sparkContext.defaultParallelism}"""
     // The full per-query-median map (~140 entries) exceeds the driver's
     // 2000-char stdout capture window — past rounds shipped the medians
     // but the driver recorded "parsed": null. Write the COMPLETE artifact
     // to a committed file and keep the stdout line small enough to parse:
     // totals + the file path.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH.json")
-    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","trials":$trials,"codec":"$codec"}"""
+    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","trials":$trials,"codec":"$codec"$extra}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // The driver parses this line from captured stdout; emit it BEFORE
@@ -140,7 +146,7 @@ object Bench {
     // stays parseable.
     val top = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
       .map { case (k, m, _) => "\"" + k + f"\":$m%.3f" }.mkString("{", ",", "}")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"queries":$top,"queries_file":"$outFile","sf":"$sfDir","trials":$trials,"codec":"$codec"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"queries":$top,"queries_file":"$outFile","sf":"$sfDir","trials":$trials,"codec":"$codec"$extra}""")
     System.out.flush()
     spark.stop()
   }

@@ -3,13 +3,15 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame}
 
-/** Lineage-rebase helper for iterative operators (r15).
+/** Lineage-rebase helper for iterative operators (r15), reached through
+  * `Scans.checkpointTracked(rebase = true)`.
   *
-  * `connectedComponentsStars` must re-wrap each round's localCheckpoint in
-  * a FRESH logical relation: the checkpoint's own `LogicalRDD` keeps the
+  * `connectedComponentsStars` re-wraps each round's localCheckpoint in a
+  * FRESH logical relation: the checkpoint's own `LogicalRDD` keeps the
   * original plan's inferred constraints, which reference attributes the
-  * checkpoint no longer outputs, and re-joining/unioning over it trips
-  * Catalyst's constraint rewrite ("key not found: src#N").
+  * checkpoint no longer outputs, and re-joining/unioning over it tripped
+  * Catalyst's constraint rewrite ("key not found: src#N"). The seam is
+  * pinned by SparkInternalsSpec.
   *
   * The r14 form — `spark.createDataFrame(ck.rdd, ck.schema)` — was correct
   * but paid a DOUBLE row conversion on every downstream read: `ck.rdd`

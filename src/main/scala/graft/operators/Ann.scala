@@ -347,14 +347,10 @@ object Ann {
     // r15: every candidate checkpoint also observes its row count, so the
     // post-loop `nCand` read is a driver-side scalar instead of one more
     // count job over the relation.
-    val sc = spark.sparkContext
-    def ckCounted(df: DataFrame): (DataFrame, Long) = {
-      val o = org.apache.spark.sql.Observation()
-      val ck = df.observe(o, count(lit(1)).as("n")).localCheckpoint(true)
-      (ck, Scans.observed(o, "initCentroids candidate count")("n")
-        .asInstanceOf[Long])
-    }
-    var (candDf, nCandCur) = ckCounted(
+    def ckCounted(df: DataFrame): Scans.Tracked =
+      Scans.checkpointTracked(df, "initCentroids candidate count",
+        Seq(count(lit(1)).as("n")))
+    var cand = ckCounted(
       v.orderBy(xxhash64(col("vec_id"), lit(seed)), col("vec_id"))
         .limit(1)
         .select(col("vec_id").as("cand_id"), col("v").as("cv")))
@@ -363,7 +359,7 @@ object Ann {
     val lCap = math.max(1, math.ceil(l).toInt)
     var exhausted = false
     for (r <- 1 to rounds if !exhausted) {
-      val cents = candDf.select(col("cand_id").as("centroid_id"), col("cv"))
+      val cents = cand.df.select(col("cand_id").as("centroid_id"), col("cv"))
       // r15: ONE assign pass per round. The scored relation feeds both
       // the round's total cost and its distance-proportional sample; the
       // former separate `agg(sum).head()` action re-ran the whole
@@ -372,53 +368,47 @@ object Ann {
       // Observation on the same job; the sample then reads cached
       // blocks. The checkpoint is (vec_id, d) — 16 bytes/row — and is
       // released as soon as the round's candidate set is materialized.
-      val costObs = org.apache.spark.sql.Observation()
-      val beforeIds = sc.getPersistentRDDs.keySet.toSet
-      val scored = ivfAssign(v, cents, "vec_id", "v", "centroid_id", "cv")
-        .select(col("vec_id"), greatest(lit(0.0), lit(1.0) - col("cosine")).as("d"))
-        .observe(costObs,
-          sum(col("d").cast(org.apache.spark.sql.types.DecimalType(38, 12)))
-            .cast("double").as("cost"))
-        .localCheckpoint(true)
-      val scoredIds = sc.getPersistentRDDs.keySet.toSet -- beforeIds
+      val scored = Scans.checkpointTracked(
+        ivfAssign(v, cents, "vec_id", "v", "centroid_id", "cv")
+          .select(col("vec_id"),
+            greatest(lit(0.0), lit(1.0) - col("cosine")).as("d")),
+        "initCentroids round cost",
+        Seq(sum(col("d").cast(org.apache.spark.sql.types.DecimalType(38, 12)))
+          .cast("double").as("cost")))
       // a null sum (empty corpus) reads as exhausted — the padding below
       // covers it (the former head().getDouble raised on that input)
-      val cost =
-        Scans.observed(costObs, "initCentroids round cost")("cost") match {
-          case d: java.lang.Double => d.doubleValue()
-          case _ => 0.0
-        }
+      val cost = scored.metrics("cost") match {
+        case d: java.lang.Double => d.doubleValue()
+        case _ => 0.0
+      }
       if (cost <= 0) exhausted = true // every point already at a center
       else {
         // distance-proportional sample, hard-capped at l rows per round
         // (hash-ordered TakeOrdered) so candidate growth is bounded by
         // design, not by sampling luck
-        val sampled = v.join(scored, "vec_id")
+        val sampled = v.join(scored.df, "vec_id")
           .filter(uniform(r) < least(lit(1.0), lit(l) * col("d") / lit(cost)))
           .orderBy(xxhash64(col("vec_id"), lit(seed + 2), lit(r)), col("vec_id"))
           .limit(lCap)
           .select(col("vec_id").as("cand_id"), col("v").as("cv"))
         // re-sampling an existing center is impossible (its d is 0), but
         // dedup anyway: the relation is O(k) rows, the safety is free
-        val (ck, n) = ckCounted(candDf.unionByName(sampled)
+        cand = ckCounted(cand.df.unionByName(sampled)
           .dropDuplicates("cand_id"))
-        candDf = ck
-        nCandCur = n
       }
-      scoredIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      scored.release()
     }
     // pad deterministically if sampling came up short of k
-    val nCand = nCandCur
-    if (nCand < k) {
-      val extra = v
-        .join(broadcast(candDf.select(col("cand_id").as("vec_id"))),
-          Seq("vec_id"), "left_anti")
-        .orderBy(xxhash64(col("vec_id"), lit(seed + 1)), col("vec_id"))
-        .limit(k - nCand.toInt)
-        .select(col("vec_id").as("cand_id"), col("v").as("cv"))
-      candDf = candDf.unionByName(extra).localCheckpoint()
-    }
+    val nCand = cand.metrics("n").asInstanceOf[Long]
+    val candDf =
+      if (nCand >= k) cand.df
+      else cand.df.unionByName(v
+          .join(broadcast(cand.df.select(col("cand_id").as("vec_id"))),
+            Seq("vec_id"), "left_anti")
+          .orderBy(xxhash64(col("vec_id"), lit(seed + 1)), col("vec_id"))
+          .limit(k - nCand.toInt)
+          .select(col("vec_id").as("cand_id"), col("v").as("cv")))
+        .localCheckpoint()
     val nCandTotal = math.max(nCand, k.toLong)
 
     // weight candidates by their attracted point counts (one assign pass)

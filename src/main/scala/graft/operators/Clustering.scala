@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a pair relation — the step that turns
@@ -8,134 +8,128 @@ import org.apache.spark.sql.functions._
   * CLUSTERS with one canonical survivor per cluster, which is what a
   * dedup pipeline actually acts on at 100 TB.
   *
-  * Algorithm: iterated min-label propagation with pointer jumping
-  * (label <- min over neighbours' labels and the label's own label),
-  * O(log(diameter)) rounds. Every round is two shuffle joins + one
-  * aggregate — all declarative, AQE-optimized; the driver only decides
-  * WHEN to stop (a count per round), it never touches row data. Dedup
-  * graphs are unions of small cliques, so convergence is 1-2 rounds in
-  * practice; maxIter bounds adversarial chains.
+  * Two algorithms share one fixpoint loop: min-label propagation
+  * ([[connectedComponents]], behind every dedup/curation entry) and
+  * large-star/small-star ([[connectedComponentsStars]]). Each round is
+  * declarative and AQE-optimized; the Spark driver only decides WHEN to
+  * stop (a count observed on the round's checkpoint job), it never
+  * touches row data.
+  *
+  * Failure contract: if `maxIter` rounds pass without reaching the
+  * fixpoint, the operator throws `IllegalStateException` naming itself,
+  * `maxIter` and the last round's change count — a non-converged
+  * labelling is never returned.
   */
 object Clustering {
 
-  /** Dev-only phase timing for the CC loops (GRAFT_CC_DEBUG=1): stderr
-    * wall-clock per phase, zero overhead when unset. Exists because the
-    * r14 in-suite regression could not be attributed from solo runs.
+  /** The fixpoint loop both algorithms run. Each round eagerly
+    * checkpoints `round(current)` (constant-size plans, constant-depth
+    * lineage — the GraphX/ML iterative-algorithm discipline) with
+    * `metrics` observed on that same job, asks `changes(previous, next)`
+    * how much the round changed, and frees the superseded round's blocks.
+    * `start` belongs to the caller and is never released here. Returns
+    * the converged state; the caller owns its blocks. A failed call
+    * leaves its blocks to the ContextCleaner.
     */
-  private val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
-  @inline private def ccTime[A](label: => String)(f: => A): A =
-    if (!ccDebug) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
+  private def fixpoint(op: String, maxIter: Int, start: Scans.Tracked,
+                       metrics: Seq[Column], rebase: Boolean)
+                      (round: DataFrame => DataFrame)
+                      (changes: (Scans.Tracked, Scans.Tracked) => Long)
+      : Scans.Tracked = {
+    var cur = start
+    var changed = -1L
+    var iter = 0
+    while (changed != 0 && iter < maxIter) {
+      val next = Scans.checkpointTracked(round(cur.df),
+        s"$op round $iter", metrics, rebase)
+      changed = changes(cur, next)
+      if (cur ne start) cur.release()
+      cur = next
+      iter += 1
     }
+    if (changed != 0)
+      throw new IllegalStateException(s"$op did not converge within " +
+        s"maxIter = $maxIter rounds (last round's change count: $changed)")
+    cur
+  }
+
+  /** `broadcast(df)` when a relation measured at `bytes` fits the
+    * session's own autoBroadcastJoinThreshold, else `df` (r15: broadcast
+    * the side you KNOW is small). The static planner sees
+    * checkpointed relations as unknown-size and plans sort-merge, paying
+    * exchange stage jobs that AQE only converts to broadcast AFTER
+    * materializing them; the hint removes those stages up front, and a
+    * 100 TB edge relation keeps the shuffle plan.
+    */
+  private def broadcastIfFits(spark: org.apache.spark.sql.SparkSession,
+                              bytes: Long): DataFrame => DataFrame =
+    if (Scans.fitsBroadcast(spark, bytes)) broadcast(_) else identity
 
   /** (node, component) for every node in `pairs`, component = min node id
     * reachable. `pairs` columns: (aCol, bCol), one row per undirected edge.
+    *
+    * Iterated min-label propagation with pointer jumping (label <- min
+    * over neighbours' labels and the label's own label), O(log(diameter))
+    * rounds. Dedup graphs are unions of small cliques, so convergence is
+    * 1-2 rounds in practice; `maxIter` bounds adversarial chains.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 16): DataFrame = {
     // Undirected edge list, both directions; self-loops are harmless.
-    // Eager localCheckpoint TRUNCATES LINEAGE: the edge relation is tiny
+    // The eager checkpoint TRUNCATES LINEAGE: the edge relation is tiny
     // relative to the corpus (only near-dup docs appear) while its
     // upstream plan (e.g. the whole LSH pipeline) is huge — without the
-    // cut, every iteration's logical plan embeds the full upstream tree
-    // and each round re-pays optimizer + codegen over it. Same pattern
-    // per iteration: constant-size plans, constant-depth lineage (the
-    // GraphX/ML iterative-algorithm discipline).
-    val sc = pairs.sparkSession.sparkContext
-    // Checkpoint with block tracking so superseded rounds' cached RDDs
-    // free DETERMINISTICALLY (the ContextCleaner would eventually GC
-    // them, but a long-lived driver clustering repeatedly shouldn't
-    // accumulate block-manager entries until then). The returned labels'
-    // blocks stay cached for the caller's consumption.
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val ck = df.localCheckpoint(true)
-      (ck, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def unpersistIds(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    // cut, every round's logical plan embeds the full upstream tree.
     // Mirror through explode(array(struct..)) rather than union-of-two-
-    // selects: one generator evaluates the (expensive) pair upstream — the
-    // LSH pipeline — exactly once, where the union's branches would each
-    // re-run it; that previously forced an extra intermediate checkpoint
-    // of the un-mirrored pairs (r14 optimization: one materialization job
-    // at loop entry instead of two).
-    val (edges, edgeIds) = ccTime("edges ck")(checkpointTracked(
+    // selects: one generator evaluates the (expensive) pair upstream
+    // exactly once, where the union's branches would each re-run it (r14:
+    // one materialization job at loop entry instead of two).
+    val edges = Scans.checkpointTracked(
       pairs.select(explode(array(
           struct(col(aCol).as("src"), col(bCol).as("dst")),
           struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))))
-    // Size-gated broadcast of the label side of both per-round joins
-    // (r15). The label relation — one row per node — is never larger than
-    // the mirrored edge relation, whose MATERIALIZED size the block
-    // manager reports exactly now that it is checkpointed. The static
-    // planner sees checkpointed relations as unknown-size and plans
-    // sort-merge, so every round paid two O(E)+O(V) exchange stage jobs
-    // that AQE only converts to broadcast AFTER materializing them; the
-    // hint (guide §3.1: broadcast the side you KNOW is small) removes
-    // those stages up front. The gate is the session's own
-    // autoBroadcastJoinThreshold, so a 100 TB edge relation keeps the
-    // shuffle plan and nothing is tuned to local mode.
-    val labelsFit = Scans.fitsBroadcast(pairs.sparkSession,
-      Scans.materializedBytes(sc, edgeIds))
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (labelsFit) broadcast(df) else df
+        .select(col("e.src").as("src"), col("e.dst").as("dst")),
+      "cc edges")
+    // The label side of both per-round joins — one row per node — is never
+    // larger than the mirrored edge relation.
+    val small = broadcastIfFits(pairs.sparkSession, edges.bytes)
     // labels0 is NOT checkpointed (r15): round 0 consumes the min-of-
     // neighbours initialization inline. Its groupBy exchange is shared by
     // every reference inside round 0's single query (ReuseExchange), so
-    // folding it removes one blocking materialization (and its driver
-    // jobs) per call without adding a shuffle; from round 1 on, `labels`
-    // is the previous round's checkpointed output exactly as before.
-    var labels: DataFrame = edges.groupBy(col("src").as("node"))
+    // folding it removes one blocking materialization per call without
+    // adding a shuffle.
+    val labels0 = edges.df.groupBy(col("src").as("node"))
       .agg(min(col("dst")).as("mind"))
       .select(col("node"), least(col("node"), col("mind")).as("comp"))
-    var labelIds: Set[Int] = Set.empty
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    val labels = fixpoint("connectedComponents", maxIter, Scans.Tracked(labels0),
+        Seq(count(when(col("comp") =!= col("prev"), 1)).as("changed")),
+        rebase = false) { cur =>
       // One round = min over {own label} ∪ {neighbours' labels} ∪
       // {label's own label} (pointer jumping), expressed as a UNION into
       // a single min-aggregate rather than candidate relations joined
-      // back onto labels (r14 optimization: the join-back passes and the
-      // neighbour pre-aggregate fold into the one groupBy — map-side
-      // partial min keeps the shuffle at the same O(E) bytes, and two
-      // label-set passes per round disappear). The self row (exactly one
-      // per node — labels is unique by node) carries the previous label
-      // through the aggregate so the convergence check needs no probe:
-      // an Observation counts changed rows DURING the round's checkpoint
-      // job (probed in tools/Probe DECOMP=obs, spec-gated in
-      // ClusteringSpec's long-chain test).
-      val neighbour = edges
-        .join(maybeBcast(labels.withColumnRenamed("node", "dst2")),
+      // back onto labels (r14: map-side partial min keeps the shuffle at
+      // O(E) bytes, and two label-set passes per round disappear). The
+      // self row (exactly one per node — labels is unique by node)
+      // carries the previous label through the aggregate, so the
+      // convergence count is observed on the round's own checkpoint job
+      // (the Observation seam is pinned by SparkInternalsSpec).
+      val labels = cur.select("node", "comp")
+      val neighbour = edges.df
+        .join(small(labels.withColumnRenamed("node", "dst2")),
           col("dst") === col("dst2"))
         .select(col("src").as("node"), col("comp"), lit(0).as("self"))
       val pointer = labels.as("l")
-        .join(maybeBcast(labels.as("p")), col("l.comp") === col("p.node"))
+        .join(small(labels.as("p")), col("l.comp") === col("p.node"))
         .select(col("l.node").as("node"), col("p.comp").as("comp"),
           lit(0).as("self"))
-      val obs = org.apache.spark.sql.Observation()
-      val (next, nextIds) = ccTime(s"round $iter ck")(checkpointTracked(labels
-        .select(col("node"), col("comp"), lit(1).as("self"))
+      labels.select(col("node"), col("comp"), lit(1).as("self"))
         .unionByName(neighbour).unionByName(pointer)
         .groupBy("node")
         .agg(min(col("comp")).as("comp"),
           max(when(col("self") === 1, col("comp"))).as("prev"))
-        .observe(obs, count(when(col("comp") =!= col("prev"), 1)).as("changed"))))
-      val changed = ccTime(s"round $iter obs.get")(
-        Scans.observed(obs, s"cc round $iter convergence")("changed")
-          .asInstanceOf[Long])
-      unpersistIds(labelIds) // superseded round's blocks
-      labels = next.select("node", "comp")
-      labelIds = nextIds
-      converged = changed == 0
-      iter += 1
-    }
-    unpersistIds(edgeIds)
-    labels.select(col("node").as("doc_id"), col("comp").as("cluster_id"))
+    } { (_, next) => next.metrics("changed").asInstanceOf[Long] }
+    edges.release()
+    labels.df.select(col("node").as("doc_id"), col("comp").as("cluster_id"))
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds
@@ -158,14 +152,11 @@ object Clustering {
     *
     * The edge relation only ever SHRINKS to the forest edges
     * (node → component min), so per-round cost is bounded by the initial
-    * near-dup edge list; like the propagation variant, every round is
-    * declarative (groupBy + min + explode) with an eager localCheckpoint
-    * truncating lineage. Fixpoint = both stars produce no new edge
-    * (checked with one tiny except-count per round). Returns the same
-    * (doc_id, cluster_id = min reachable node) relation as
-    * [[connectedComponents]].
-    */
-  /** @param dedupPairs pass false when `pairs` is PROVABLY one row per
+    * near-dup edge list. Fixpoint = both stars produce no new edge.
+    * Returns the same (doc_id, cluster_id = min reachable node) relation
+    * as [[connectedComponents]].
+    *
+    * @param dedupPairs pass false when `pairs` is PROVABLY one row per
     *   undirected edge in canonical (aCol < bCol) orientation — e.g.
     *   minhashLshPairs output, unique by its verification groupBy with
     *   doc_a < doc_b from candidate generation — to skip the initial
@@ -176,40 +167,21 @@ object Clustering {
   def connectedComponentsStars(pairs: DataFrame, aCol: String, bCol: String,
                                maxIter: Int = 32,
                                dedupPairs: Boolean = true): DataFrame = {
-    val spark = pairs.sparkSession
-    val sc = spark.sparkContext
-    // Checkpoint, then rebase the DataFrame on the cached RDD with a
-    // FRESH logical relation: a bare localCheckpoint keeps the original
-    // plan's inferred constraints, which reference attributes the
-    // checkpoint no longer outputs — re-wrapping the next round's
-    // union/join over that relation trips Catalyst's constraint rewrite
-    // ("key not found: src#N"). r15: the rebase hands the checkpoint's
-    // InternalRow RDD straight to a fresh relation
-    // (DataFrameUtils.rebase) — the r14 createDataFrame(ck.rdd, schema)
-    // form paid an InternalRow→Row→InternalRow double conversion on
-    // EVERY downstream read of every round's edges (three per round).
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val ck = df.localCheckpoint(true)
-      (org.apache.spark.sql.graft.DataFrameUtils.rebase(ck),
-        sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def unpersistIds(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    // Size-gated broadcast of each star's per-node-min side (r15, guide
-    // §3.1 — broadcast the side you KNOW is small): `mins` is one
-    // (node, min) row per node, never more than twice the canonical edge
-    // relation whose exact materialized size the block manager reports
-    // after the initial checkpoint. The static planner sees the
-    // checkpoint-rebased relations as unknown-size and plans sort-merge,
-    // paying an O(E) exchange + sort per star that AQE only converts
-    // AFTER materializing; the hint removes those stages up front. Gate =
-    // the session's own autoBroadcastJoinThreshold against 2× the
-    // measured edge bytes (the |V| ≤ 2|E| bound), so at scale the
-    // shuffle plan is kept untuned.
-    var minsFit = false
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (minsFit) broadcast(df) else df
+    // Every edge checkpoint is REBASED (see Scans.checkpointTracked): each
+    // round self-joins and unions the previous one.
+    val edgeCount = Seq(count(lit(1)).as("n"))
+    def nEdges(t: Scans.Tracked): Long = t.metrics("n").asInstanceOf[Long]
+    val canonical = pairs
+      .select(least(col(aCol), col(bCol)).as("src"),
+        greatest(col(aCol), col(bCol)).as("dst"))
+      .filter(col("src") =!= col("dst"))
+    // Initial emptiness rides the same checkpoint job (r14).
+    val edges0 = Scans.checkpointTracked(
+      if (dedupPairs) canonical.distinct() else canonical,
+      "stars initial edge count", edgeCount, rebase = true)
+    // `mins` — one (node, min) row per node — is never more than twice
+    // the canonical edge relation (the |V| ≤ 2|E| bound).
+    val small = broadcastIfFits(pairs.sparkSession, 2L * edges0.bytes)
     // Large-star: group the SYMMETRIC neighbourhood by u, emit
     // (v, min(N(u) ∪ u)) for v > u. Small-star: orient edges high→low
     // (u ≥ v), group by the high end, emit (v, m) for every low
@@ -224,7 +196,7 @@ object Clustering {
       val nbr = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
       val mins = nbr.groupBy("src")
         .agg(least(min(col("dst")), col("src")).as("m"))
-      nbr.join(maybeBcast(mins), "src")
+      nbr.join(small(mins), "src")
         .filter(col("dst") > col("src"))
         .select(least(col("dst"), col("m")).as("src"),
           greatest(col("dst"), col("m")).as("dst"))
@@ -233,14 +205,13 @@ object Clustering {
       // aggregate is duplicate-insensitive and whose output carries the
       // round's distinct() — and largeStar emits at most one row per
       // directed (u, v>u) input pair, so skipping the dedup cannot blow
-      // the relation up. One exchange per round removed; the fixpoint
-      // probe still compares DISTINCT edge sets (smallStar's output).
+      // the relation up.
     }
     def smallStar(e: DataFrame): DataFrame = {
       val hiLo = e.select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       val mins = hiLo.groupBy("u").agg(min(col("v")).as("m"))
-      val viaNbr = hiLo.join(maybeBcast(mins), "u")
+      val viaNbr = hiLo.join(small(mins), "u")
         .select(least(col("v"), col("m")).as("src"),
           greatest(col("v"), col("m")).as("dst"))
         .filter(col("src") =!= col("dst"))
@@ -249,90 +220,46 @@ object Clustering {
         .filter(col("src") =!= col("dst"))
       viaNbr.unionByName(viaSelf).distinct()
     }
-    // Initial emptiness rides an Observation on the same checkpoint job
-    // (r14: the old edges.isEmpty probe was one more driver job).
-    val initObs = org.apache.spark.sql.Observation()
-    val canonical = pairs
-      .select(least(col(aCol), col(bCol)).as("src"),
-        greatest(col(aCol), col(bCol)).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    var (edges, edgeIds) = ccTime("stars edges ck")(checkpointTracked(
-      (if (dedupPairs) canonical.distinct() else canonical)
-        .observe(initObs, count(lit(1)).as("n"))))
-    minsFit = Scans.fitsBroadcast(spark,
-      2L * Scans.materializedBytes(sc, edgeIds))
-    // Nodes with no surviving edge after a star round are their own
-    // component OR have already been attached to their min; the final
-    // labelling needs the INITIAL node set so singleton-ified nodes stay
-    // covered (every original node appears in the output, matching
-    // connectedComponents' contract). r15: derive it lazily from the
-    // initial checkpointed edges inside the final labelling job instead
-    // of materializing a second checkpoint at loop entry — same
-    // union+distinct work, one blocking driver job fewer per call. The
-    // initial edge blocks are protected from the loop's unpersist and
-    // released after the labels checkpoint.
-    val edges0 = edges
-    val edges0Ids = edgeIds
-    var iter = 0
-    var prevCount = ccTime("stars init obs.get")(
-      Scans.observed(initObs, "stars initial edge count")("n")
-        .asInstanceOf[Long])
-    var converged = prevCount == 0
-    while (iter < maxIter && !converged) {
-      // Each round's checkpoint job also observes its output row count
-      // (r15): both sides of the fixpoint comparison are DISTINCT edge
-      // sets, so differing counts prove the sets differ and the round is
-      // not converged — the symmetric-difference probe job only runs when
-      // the counts match (typically the final round), removing one driver
-      // job + one co-grouping pass from every non-final round.
-      val roundObs = org.apache.spark.sql.Observation()
-      val (next, nextIds) = ccTime(s"stars round $iter ck")(
-        checkpointTracked(smallStar(largeStar(edges))
-          .observe(roundObs, count(lit(1)).as("n"))))
-      val nextCount = ccTime(s"stars round $iter obs.get")(
-        Scans.observed(roundObs, s"stars round $iter edge count")("n")
-          .asInstanceOf[Long])
-      // Fixpoint = identical edge SETS (both sides are distinct() by
-      // construction): ONE symmetric-difference probe — union with ±1
-      // weights, grouped sum ≠ 0 ⟺ an edge on exactly one side — in
-      // place of the former two left-anti probes (r14: one driver job
-      // and one co-grouping pass per round instead of two join probes;
-      // joins would sort or broadcast, the weighted union is a plain
-      // partial-aggregated count shuffle). Safe against the exceptAll
-      // constraint-propagation trap because both sides are rebased
-      // checkpoints with fresh lineage (see checkpointTracked above).
-      val changed =
-        if (nextCount != prevCount) 1L
-        else ccTime(s"stars round $iter probe")(
-          next.select(col("src"), col("dst"), lit(1).as("w"))
-          .unionByName(edges.select(col("src"), col("dst"), lit(-1).as("w")))
+    // The initial edge blocks are the loop's start state, so the loop
+    // keeps them: the final labelling below derives the node set from
+    // them (r15: lazily, inside the labels job, instead of a second
+    // checkpoint at loop entry).
+    val forest =
+      if (nEdges(edges0) == 0) edges0
+      else fixpoint("connectedComponentsStars", maxIter, edges0, edgeCount,
+          rebase = true)(e => smallStar(largeStar(e))) { (prev, next) =>
+        // Both sides are DISTINCT edge sets, so differing counts (observed
+        // on the checkpoint job, r15) prove the round changed something;
+        // only equal counts pay ONE symmetric-difference probe — union
+        // with ±1 weights, grouped sum ≠ 0 ⟺ an edge on exactly one side
+        // (r14: a plain partial-aggregated count shuffle in place of two
+        // left-anti join probes).
+        val diff = math.abs(nEdges(next) - nEdges(prev))
+        if (diff != 0) diff
+        else next.df.select(col("src"), col("dst"), lit(1).as("w"))
+          .unionByName(prev.df.select(col("src"), col("dst"), lit(-1).as("w")))
           .groupBy("src", "dst").agg(sum(col("w")).as("d"))
           .filter(col("d") =!= 0)
-          .limit(1).count())
-      unpersistIds(edgeIds -- edges0Ids)
-      edges = next
-      edgeIds = nextIds
-      prevCount = nextCount
-      converged = changed == 0
-      iter += 1
-    }
+          .limit(1).count()
+      }
     // At fixpoint the edge relation IS the star forest: every non-root
     // appears exactly once as (component min, node). Nodes absent from
     // the dst side are component roots labelling themselves. Checkpoint
-    // the labels BEFORE releasing the edge/node blocks they derive from
-    // (the caller consumes labels after this frame returns).
-    val nodes = edges0.select(col("src").as("node"))
-      .unionByName(edges0.select(col("dst").as("node"))).distinct()
-    // the fixpoint forest never exceeds the initial edge relation, so the
-    // same size gate covers broadcasting it under the left join
-    val (labels, _) = ccTime("stars labels ck")(checkpointTracked(nodes
-      .join(maybeBcast(
-          edges.select(col("dst").as("node"), col("src").as("comp"))),
+    // the labels BEFORE releasing the edge blocks they derive from (the
+    // caller consumes labels after this frame returns); the forest never
+    // exceeds the initial edge relation, so the same size gate covers
+    // broadcasting it under the left join.
+    val nodes = edges0.df.select(col("src").as("node"))
+      .unionByName(edges0.df.select(col("dst").as("node"))).distinct()
+    val labels = Scans.checkpointTracked(nodes
+      .join(small(forest.df.select(col("dst").as("node"), col("src").as("comp"))),
         Seq("node"), "left")
       .select(col("node").as("doc_id"),
-        coalesce(col("comp"), col("node")).as("cluster_id"))))
-    unpersistIds(edgeIds ++ edges0Ids)
-    labels
+        coalesce(col("comp"), col("node")).as("cluster_id")),
+      "stars labels", rebase = true)
+    forest.release()
+    edges0.release()
+    labels.df
   }
 
   /** Duplicate clusters from near-dup pairs: every clustered doc with its

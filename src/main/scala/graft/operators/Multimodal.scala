@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media payloads as opaque binary columns with
@@ -91,16 +91,6 @@ object Multimodal {
       lower(hex(substring(col(payloadCol), 1, 4))).as("header_hex"),
       expr(s"(octet_length($payloadCol) + 255) div 256").cast("long").as("n_frames"),
       payloadChecksum(payloadCol).as("checksum"))
-
-  /** documents.text rendered as an opaque binary payload — the testdata has
-    * no real media column, so the text bytes play that role.
-    */
-  def payloadsFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"),
-        encode(col("text"), "UTF-8").as("payload"))
-      .as[MediaRow]
-  }
 
   // ------------------------------------------------------------- frames
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Scan-parallelism plumbing shared by operators and query bodies (r14
@@ -87,15 +87,14 @@ object Scans {
 
   /** Bounded read of an [[org.apache.spark.sql.Observation]] whose
     * metrics were published by an EAGER localCheckpoint rather than a
-    * caller-run action (the CC loops' fused convergence counts, the
-    * kmeans candidate counts). That publish relies on Spark-internal
-    * behavior — eager checkpoint executing under `withAction` — probed
-    * and spec-gated on this Spark version; if an upgrade changes the
-    * wrapping, the metrics never arrive and a bare `get()` would hang
-    * the operator FOREVER (r14 advice). By the time callers read, the
-    * checkpoint action has already completed, so the metrics future is
-    * normally already resolved; the deadline only fires in the
-    * broken-contract case, as a pointed error instead of a hang.
+    * caller-run action (see [[checkpointTracked]]). That publish relies on
+    * Spark-internal behavior — eager checkpoint executing under
+    * `withAction` — pinned by SparkInternalsSpec on this Spark version;
+    * if an upgrade changes the wrapping, the metrics never arrive and a
+    * bare `get()` would hang the operator FOREVER (r14 advice). The
+    * metrics arrive through the listener bus, so the future may resolve
+    * a moment after the checkpoint call returns; the deadline only fires
+    * in the broken-contract case, as a pointed error instead of a hang.
     */
   def observed(obs: org.apache.spark.sql.Observation, what: => String,
                deadlineSec: Int = 600): Map[String, Any] =
@@ -114,15 +113,58 @@ object Scans {
             "reads to driver-side count probes.")
     }
 
-  /** Exact materialized byte size of already-cached/checkpointed RDDs, from
-    * the block manager's storage report (driver-side metadata, no job).
-    * `ids` are the RDD ids a `localCheckpoint(true)` registered — e.g. the
-    * tracked set Clustering's checkpointTracked returns. Returns 0 when
-    * nothing is found (empty relation or already unpersisted).
+  /** A relation with the cached RDDs it owns and the Observation metrics
+    * its checkpoint job published. A lazy relation is a `Tracked` with no
+    * RDDs and no metrics: releasing it frees nothing.
     */
-  def materializedBytes(sc: SparkContext, ids: Set[Int]): Long =
-    sc.getRDDStorageInfo.filter(i => ids.contains(i.id))
-      .map(i => i.memSize + i.diskSize).sum
+  final case class Tracked(df: DataFrame, metrics: Map[String, Any] = Map.empty,
+                           rdds: Seq[RDD[_]] = Nil) {
+    /** Exact materialized byte size of the owned blocks, from the block
+      * manager's storage report (driver-side metadata, no job); 0 when
+      * nothing is cached (empty relation or already released).
+      */
+    def bytes: Long = {
+      val ids = rdds.map(_.id).toSet
+      df.sparkSession.sparkContext.getRDDStorageInfo
+        .filter(i => ids.contains(i.id)).map(i => i.memSize + i.diskSize).sum
+    }
+
+    /** Frees the owned blocks DETERMINISTICALLY: the ContextCleaner would
+      * eventually collect them, but a long-lived driver that checkpoints
+      * repeatedly should not accumulate block-manager entries until then.
+      */
+    def release(): Unit = rdds.foreach(_.unpersist(false))
+  }
+
+  /** Eager `localCheckpoint(true)` of `df` that records the RDDs the
+    * checkpoint registered (for [[Tracked.bytes]] and
+    * [[Tracked.release]]). `metrics` ride the checkpoint job itself as an
+    * Observation — no extra driver job — read through [[observed]]'s
+    * deadline; `what` names them in its error.
+    *
+    * `rebase` re-wraps the checkpoint in a FRESH logical relation
+    * ([[org.apache.spark.sql.graft.DataFrameUtils.rebase]]): a bare
+    * checkpoint keeps the original plan's inferred constraints, which
+    * reference attributes it no longer outputs, so self-joining or
+    * unioning it in the next round trips Catalyst's constraint rewrite
+    * ("key not found: src#N").
+    */
+  def checkpointTracked(df: DataFrame, what: => String,
+                        metrics: Seq[Column] = Nil,
+                        rebase: Boolean = false): Tracked = {
+    val sc = df.sparkSession.sparkContext
+    def persistent = sc.getPersistentRDDs
+    val before = persistent.keySet.toSet
+    val obs = if (metrics.isEmpty) None
+              else Some(org.apache.spark.sql.Observation())
+    val ck = obs.fold(df)(df.observe(_, metrics.head, metrics.tail: _*))
+      .localCheckpoint(true)
+    val rdds = persistent.collect { case (id, r) if !before(id) => r }.toSeq
+    Tracked(
+      if (rebase) org.apache.spark.sql.graft.DataFrameUtils.rebase(ck) else ck,
+      obs.fold(Map.empty[String, Any])(observed(_, what)),
+      rdds)
+  }
 
   /** Would a relation of `bytes` qualify for a broadcast join under the
     * session's own `spark.sql.autoBroadcastJoinThreshold`? Used to hint

@@ -305,23 +305,6 @@ object TextDedup {
 
   // ------------------------------------------------------------- MinHash
 
-  /** MinHash signature columns m0..m{numPerm-1} per doc_id from a
-    * (doc_id, s) shingle relation. Each shingle is hashed ONCE with
-    * xxhash64; permutation i is the cheap re-mix xxhash64(h, i) folded by a
-    * min-aggregate (numPerm longs of state per doc, map-side partial agg,
-    * one shuffle on doc_id). An array-lambda formulation would re-hash the
-    * strings once per permutation AND run interpreted.
-    */
-  def minhashSignatureCols(shingleRows: DataFrame, numPerm: Int): DataFrame =
-    minhashSignatureColsFromHashes(
-      shingleRows.select(col("doc_id"), xxhash64(col("s")).as("h")), numPerm)
-
-  /** As [[minhashSignatureCols]] but over pre-hashed shingles (doc_id, h). */
-  def minhashSignatureColsFromHashes(hashedRows: DataFrame, numPerm: Int): DataFrame = {
-    val minCols = (0 until numPerm).map(i => min(xxhash64(col("h"), lit(i))).as(s"m$i"))
-    hashedRows.groupBy("doc_id").agg(minCols.head, minCols.tail: _*)
-  }
-
   /** Distinct (doc_id, h) with h = xxhash64(shingle): the hash is applied
     * BEFORE the distinct so the dedup shuffle and every downstream join
     * move longs, not shingle strings.
@@ -330,12 +313,6 @@ object TextDedup {
                        n: Int, spread: Boolean = true): DataFrame =
     gramRows(docs, idCol, textCol, n, spread)
       .select(col("doc_id"), xxhash64(col("s")).as("h")).distinct()
-
-  /** Signature as one array<long> column (API/spec convenience). */
-  def minhashSignatures(shingleRows: DataFrame, numPerm: Int): DataFrame =
-    minhashSignatureCols(shingleRows, numPerm)
-      .select(col("doc_id"),
-        array((0 until numPerm).map(i => col(s"m$i")): _*).as("sig"))
 
   /** LSH candidate pairs (doc_a < doc_b, distinct) from a (doc_id, h)
     * shingle-hash relation: band keys via the typed aggregate, bucket

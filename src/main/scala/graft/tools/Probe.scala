@@ -336,75 +336,6 @@ object Probe {
               (_: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => ())
             println(f"[decomp] phash execute#$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
           }
-        case "cc" =>
-          // r15: attribute the CC entries' job costs. (a) why does the
-          // stars edges checkpoint cost ~2.2 s warm when the propagation
-          // mirror costs ~0.15 s? (b) what does one tiny round-job cost?
-          val pairs = TextDedup.minhashLshPairs(
-            docs, "doc_id", "text", 3, 128, 32, 0.8)
-          def ckTime(label: String)(df: => DataFrame): Unit = {
-            var jobs = 0
-            var nparts = 0
-            val ts = (1 to trials).map { _ =>
-              System.gc()
-              val j0 = jobCounter.get()
-              val t0 = System.nanoTime()
-              val ck = df.localCheckpoint(true)
-              val dt = (System.nanoTime() - t0) / 1e9
-              Thread.sleep(200)
-              jobs = jobCounter.get() - j0
-              nparts = ck.rdd.getNumPartitions
-              ck.rdd.unpersist(false)
-              dt
-            }.sorted
-            println(f"[decomp] ck $label%-34s median=${ts(ts.size / 2)}%6.2f s jobs=$jobs parts=$nparts (${ts.map(t => f"$t%.2f").mkString(" ")})")
-          }
-          for ((l, d) <- Seq(
-            "mirror" -> pairs.select(explode(array(
-                struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-                struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-              .select(col("e.src").as("src"), col("e.dst").as("dst")),
-            "starsBase" -> pairs.select(least(col("doc_a"), col("doc_b")).as("src"),
-                greatest(col("doc_a"), col("doc_b")).as("dst"))
-              .filter(col("src") =!= col("dst"))))
-            println(s"[decomp] plan $l root = ${d.queryExecution.executedPlan.getClass.getSimpleName}")
-          if (sys.env.contains("CCPLAN")) {
-            val base = pairs.select(least(col("doc_a"), col("doc_b")).as("src"),
-                greatest(col("doc_a"), col("doc_b")).as("dst"))
-              .filter(col("src") =!= col("dst"))
-            val qe = base.queryExecution
-            val ck = base.localCheckpoint(true)
-            println("[decomp] === starsBase plan AFTER checkpoint ===")
-            println(qe.executedPlan.toString.take(4000))
-            println(s"[decomp] ck parts=${ck.rdd.getNumPartitions}")
-            spark.stop(); return
-          }
-          med("lsh pairs (noop)")(pairs)
-          ckTime("mirror explode (propagation)")(
-            pairs.select(explode(array(
-                struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-                struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-              .select(col("e.src").as("src"), col("e.dst").as("dst")))
-          val starsBase = pairs.select(least(col("doc_a"), col("doc_b")).as("src"),
-              greatest(col("doc_a"), col("doc_b")).as("dst"))
-            .filter(col("src") =!= col("dst"))
-          ckTime("stars base (no distinct/observe)")(starsBase)
-          ckTime("stars base + distinct")(starsBase.distinct())
-          ckTime("stars base + observe")(
-            starsBase.observe(org.apache.spark.sql.Observation(),
-              count(lit(1)).as("n")))
-          ckTime("stars base + distinct + observe")(
-            starsBase.distinct().observe(org.apache.spark.sql.Observation(),
-              count(lit(1)).as("n")))
-        case "obs" =>
-          // sanity probe: does an Observation attached below an EAGER
-          // localCheckpoint fire during the checkpoint job? (the planned
-          // CC convergence-check fusion depends on it)
-          val obs = org.apache.spark.sql.Observation()
-          val df = spark.range(1000).toDF("x")
-            .observe(obs, count(when(col("x") % 2 === 0, 1)).as("c"))
-          val ck = df.localCheckpoint(true)
-          println(s"[decomp] obs value = ${obs.get("c")} (expect 500), ck rows = ${ck.count()}")
         case other => println(s"[decomp] unknown family: $other")
       }
       spark.stop(); return

@@ -158,6 +158,7 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("connectedComponents matches a union-find reference on random graphs") {
+    // both algorithms run on every generated graph
     val spark0 = spark
     import spark0.implicits._
     val edgeGen = Gen.zip(Gen.choose(0L, 30L), Gen.choose(0L, 30L))
@@ -166,9 +167,12 @@ class PropertiesSpec extends SparkSpec {
     for (seed <- 0 until 3) {
       val edges = samples(edgeGen, 25 + 5 * seed).distinct
       if (edges.nonEmpty) {
-        val got = graft.operators.Clustering
-          .connectedComponents(edges.toDF("a", "b"), "a", "b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        def labels(cc: (org.apache.spark.sql.DataFrame, String, String) =>
+            org.apache.spark.sql.DataFrame): Map[Long, Long] =
+          cc(edges.toDF("a", "b"), "a", "b")
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val viaProp = labels(graft.operators.Clustering.connectedComponents(_, _, _))
+        val viaStars = labels(graft.operators.Clustering.connectedComponentsStars(_, _, _))
         // reference union-find with min-label roots
         val parent = scala.collection.mutable.Map.empty[Long, Long]
         def find(x: Long): Long = {
@@ -181,7 +185,8 @@ class PropertiesSpec extends SparkSpec {
         }
         val expect = edges.flatMap(e => Seq(e._1, e._2)).distinct
           .map(n => n -> find(n)).toMap
-        assert(got == expect, s"seed $seed")
+        assert(viaProp == expect, s"propagation, seed $seed")
+        assert(viaStars == expect, s"stars, seed $seed")
       }
     }
   }

@@ -70,6 +70,21 @@ class ClusteringSpec extends SparkSpec {
     assert(labels(Clustering.connectedComponentsStars(empty, "a", "b")).isEmpty)
   }
 
+  test("both variants fail loudly when maxIter rounds do not converge") {
+    // A 64-node chain needs ~log2(64) pointer-jumping rounds and several
+    // star rounds; too small a bound must raise, never return the
+    // non-converged labels.
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
+    val prop = intercept[IllegalStateException](labels(
+      Clustering.connectedComponents(chain, "a", "b", maxIter = 2)))
+    assert(prop.getMessage.contains("connectedComponents did not converge"))
+    assert(prop.getMessage.contains("maxIter = 2"))
+    val stars = intercept[IllegalStateException](labels(
+      Clustering.connectedComponentsStars(chain, "a", "b", maxIter = 1)))
+    assert(stars.getMessage.contains("connectedComponentsStars did not converge"))
+    assert(stars.getMessage.contains("maxIter = 1"))
+  }
+
   test("stars output is identical across partitionings") {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 3L))
       .toDF("a", "b")
